@@ -87,7 +87,7 @@ final case class Series(df: DataFrame) {
   def interpolate(unit: String, step: String): DataFrame =
     GapFill.interpolate(df, unit, step)
   def rollup(unit: String): DataFrame = Rollup.rollupRaw(df, unit)
-  def rollupSketched(unit: String): DataFrame = SketchedRollup.rollupRaw(df, unit)
+  def rollupSketched(unit: String): DataFrame = Rollup.rollupRaw(df, unit, sketched = true)
   def toSegments(unit: String = "day"): DataFrame = Segments.toSegments(df, unit)
   def ewma(k: Int, alpha: Double = 0.5): DataFrame =
     SeriesOps.ewma(df, k, alpha)

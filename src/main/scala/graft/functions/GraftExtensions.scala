@@ -5,11 +5,13 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DoubleType, IntegerType, LongType, StringType}
 
-/** One registry for every engine function exposed to SQL — sketches
-  * (KLL quantiles, frequent items), the vec_dot codegen kernel, the
-  * FFT expression, and the Gorilla/delta-of-delta codecs — so SQL
-  * users get the same Catalyst-native operators the Column API wraps
-  * (no UDF indirection).
+/** One registry for every engine function exposed to SQL — the
+  * frequent-items sketch, the vec_dot codegen kernel, the FFT
+  * expression, and the Gorilla/delta-of-delta codecs — so SQL users
+  * get the same Catalyst-native operators the Column API wraps (no UDF
+  * indirection). KLL quantile sketches are Spark's own built-ins
+  * (`kll_sketch_agg_double`, `kll_merge_agg_double`, …), already
+  * registered in every session.
   *
   * Two registration paths:
   *   - [[GraftFunctions.registerAll]] — runtime, per-session (tests,
@@ -33,13 +35,10 @@ object GraftFunctions {
 
   // Every value-typed argument is coerced with an explicit Cast at
   // registration: SQL-side types rarely match the eval's assumption
-  // (a bare `0.5` parses as DECIMAL(1,1); an INT/BIGINT column would
-  // ClassCastException inside kll_sketch's executor-side unbox; a
-  // DATE item would be stored under its internal toString while the
+  // (a DATE item would be stored under its internal toString while the
   // freq_estimate probe casts to the external form). Casting the
   // sketch/binary args to BinaryType turns a wrong-typed argument
   // into an analysis-time error instead of a deep runtime CCE.
-  private def dbl(e: Expression) = Cast(e, DoubleType)
   private def str(e: Expression) = Cast(e, StringType)
   private def bin(e: Expression) = Cast(e, BinaryType)
   private def darr(e: Expression) = Cast(e, ArrayType(DoubleType))
@@ -47,24 +46,6 @@ object GraftFunctions {
 
   /** (name, builder) for every SQL-exposed engine function. */
   val all: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "kll_sketch" -> {
-      case Seq(v) => KllAgg.KllSketchAgg(dbl(v)).toAggregateExpression()
-      case Seq(v, k) => KllAgg.KllSketchAgg(dbl(v), intArg(k, "k")).toAggregateExpression()
-      case _ => arity("kll_sketch", 1, 2)
-    },
-    "kll_merge" -> {
-      case Seq(s) => KllAgg.KllMergeAgg(bin(s)).toAggregateExpression()
-      case Seq(s, k) => KllAgg.KllMergeAgg(bin(s), intArg(k, "k")).toAggregateExpression()
-      case _ => arity("kll_merge", 1, 2)
-    },
-    "kll_quantile" -> {
-      case Seq(s, q) => KllAgg.KllQuantile(bin(s), dbl(q))
-      case _ => arity("kll_quantile", 2)
-    },
-    "kll_n" -> {
-      case Seq(s) => KllAgg.KllN(bin(s))
-      case _ => arity("kll_n", 1)
-    },
     "freq_sketch" -> {
       case Seq(v) => FreqAgg.FreqSketchAgg(str(v)).toAggregateExpression()
       case Seq(v, m) => FreqAgg.FreqSketchAgg(str(v), intArg(m, "maxMapSize")).toAggregateExpression()

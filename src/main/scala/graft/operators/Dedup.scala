@@ -33,10 +33,6 @@ object Dedup {
   def shinglesOf(toks: Column, n: Int): Column =
     array_distinct(TextAnalysis.gramsOf(toks, n))
 
-  /** Column-API convenience (small inputs / tests). */
-  def shingles(text: Column, n: Int): Column =
-    shinglesOf(split(lower(text), "\\s+"), n)
-
   /** Scale-adaptive scan parallelism for expensive per-row text
     * projections (guide §2.5 "input skew"): when the upstream plan has
     * fewer partitions than the session's parallelism — the
@@ -137,16 +133,6 @@ object Dedup {
     docs.select(col("doc_id"))
       .join(rebuilt, Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-  }
-
-  /** k min-hash values per doc from word shingles, as array<long>.
-    * Hash family: xxhash64(shingle, seed_i). Kept for tests/small
-    * inputs — prefer [[minhashSignatures]] which stages the shingle
-    * array (this inline form recomputes it per seed). */
-  def minhashSignature(text: Column, k: Int, shingleN: Int = 3): Column = {
-    val sh = shingles(text, shingleN)
-    transform(sequence(lit(0), lit(k - 1)), i =>
-      array_min(transform(sh, s => xxhash64(s, i))))
   }
 
   /** Staged signature computation: tokens → shingle array → k
@@ -452,12 +438,6 @@ object Dedup {
       .where(col("hamming") <= maxDist)
       .distinct()
   }
-
-  /** Embedding cosine near-dup: pairs with cosine ≥ threshold via the
-    * Similarity module's bucketed join (thin wrapper for catalog
-    * completeness). */
-  def cosineNearDups(embeddings: DataFrame, threshold: Double): DataFrame =
-    Similarity.cosineSelfJoin(embeddings, threshold)
 
   /** End-to-end near-duplicate pipeline: MinHash-LSH candidate pairs
     * → exact n-gram Jaccard verification → pairs ≥ threshold with the

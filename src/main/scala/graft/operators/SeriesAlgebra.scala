@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.KllAgg
 
 /** Binary element-wise Series algebra + misc Data-surface parity ops
   * (thunder/base.py :: Data.element_wise / plus / minus / dottimes /
@@ -282,48 +281,5 @@ object SeriesAlgebra {
         col("n"),
         (col("sum_d").cast("double") / col("n")).as("mean_v"),
         col("min_v"), col("max_v"))
-  }
-}
-
-/** Rollup tiers carrying KLL percentile sketches alongside the exact
-  * mergeable stats (FIXTURES.md §A.2 tier row: …, m2, kll BINARY).
-  * The sketch column merges through the cascade exactly like the
-  * decimal sums — kll_sketch at raw, kll_merge at every coarser tier.
-  */
-object SketchedRollup {
-
-  def rollupRaw(points: DataFrame, unit: String, k: Int = 200): DataFrame = {
-    val vd = col("v").cast("decimal(18,6)")
-    points
-      .where(col("v").isNotNull)
-      .groupBy(col("key"), Rollup.bucket(col("ts"), unit).as("bucket"))
-      .agg(
-        count(lit(1)).as("cnt"),
-        sum(vd).as("sum_d"),
-        sum(vd * vd).as("sumsq_d"),
-        min(col("v")).as("min_v"),
-        max(col("v")).as("max_v"),
-        KllAgg.kll_sketch(col("v"), k).as("kll"))
-  }
-
-  def cascade(finer: DataFrame, unit: String, k: Int = 200): DataFrame =
-    finer
-      .groupBy(col("key"), Rollup.bucket(col("bucket"), unit).as("bucket"))
-      .agg(
-        sum(col("cnt")).as("cnt"),
-        sum(col("sum_d")).as("sum_d"),
-        sum(col("sumsq_d")).as("sumsq_d"),
-        min(col("min_v")).as("min_v"),
-        max(col("max_v")).as("max_v"),
-        KllAgg.kll_merge(col("kll"), k).as("kll"))
-
-  /** Present with percentiles from the sketch. */
-  def present(rollup: DataFrame, quantiles: Seq[Double] = Seq(0.5, 0.9, 0.99)): DataFrame = {
-    val base = Rollup.present(rollup.drop("kll"))
-    val kCols = Seq(col("key"), col("bucket"),
-      KllAgg.kll_n(col("kll")).as("kll_n")) ++ quantiles.map(q =>
-      KllAgg.kll_quantile(col("kll"), q).as(s"p${(q * 100).toInt}"))
-    val withK = rollup.select(kCols: _*)
-    base.join(withK, Seq("key", "bucket"))
   }
 }

@@ -54,16 +54,13 @@ object SeriesOps {
   /** Series.center / standardize / zscore (ddof=0). `mean` and `std`
     * come from the key's exact decimal sums so every engine agrees. */
   private def keyStats(points: DataFrame): DataFrame = {
-    val vd = col("v").cast("decimal(18,6)")
-    val agg = points.groupBy(col("key")).agg(
-      count(lit(1)).as("n"),
-      sum(vd).as("s_d"),
-      sum(vd * vd).as("sq_d"))
-    agg.select(col("key"), col("n"),
-      (col("s_d").cast("double") / col("n")).as("k_mean"),
-      sqrt(greatest(col("sq_d").cast("double") / col("n") -
-        (col("s_d").cast("double") / col("n")) * (col("s_d").cast("double") / col("n")),
-        lit(0.0))).as("k_std"))
+    val mean = col("sum_d").cast("double") / col("cnt")
+    // min_v/max_v are pruned by the optimizer: nothing reads them
+    Rollup.partial(points.groupBy(col("key")))
+      .select(col("key"), col("cnt").as("n"),
+        mean.as("k_mean"),
+        sqrt(greatest(col("sumsq_d").cast("double") / col("cnt") - mean * mean,
+          lit(0.0))).as("k_std"))
   }
 
   def center(points: DataFrame): DataFrame =
@@ -550,21 +547,8 @@ object SeriesOps {
     * map-side partials, exact decimal sums, std via the same rescaled
     * presentation as Rollup.present. */
   def statsAcrossKeys(points: DataFrame, unit: String): DataFrame = {
-    val vd = col("v").cast("decimal(18,6)")
-    val agg = points.groupBy(Rollup.bucket(col("ts"), unit).as("bucket"))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(vd).as("sum_d"),
-        sum(vd * vd).as("sumsq_d"),
-        min(col("v")).as("min_v"),
-        max(col("v")).as("max_v"))
-    val mean = col("sum_d").cast("double") / col("n")
-    val ex2 = col("sumsq_d").cast("decimal(38,6)").cast("double") / col("n")
-    agg.select(col("bucket"), col("n"),
-      col("sum_d").cast("double").as("sum_v"),
-      mean.as("mean_v"),
-      col("min_v"), col("max_v"),
-      sqrt(greatest(ex2 - mean * mean, lit(0.0))).as("std_v"))
+    Rollup.partial(points.groupBy(Rollup.bucket(col("ts"), unit).as("bucket")))
+      .select(Seq(col("bucket"), col("cnt").as("n")) ++ Rollup.presentStats: _*)
   }
 
   /** Distinct-count surface (SURVEY §2.3): exact per-bucket distinct

@@ -48,24 +48,10 @@ object Skew {
           pmod(xxhash64(col("ts")), lit(salt.toLong))).otherwise(lit(0L))
       case None => pmod(xxhash64(col("ts")), lit(salt.toLong))
     }
-    val vd = col("v").cast("decimal(18,6)")
-    val phase1 = points
+    val phase1 = Rollup.partial(points
       .where(col("v").isNotNull)
       .groupBy(col("key"), Rollup.bucket(col("ts"), unit).as("bucket"),
-        saltCol.as("salt"))
-      .agg(
-        count(lit(1)).as("cnt"),
-        sum(vd).as("sum_d"),
-        sum(vd * vd).as("sumsq_d"),
-        min(col("v")).as("min_v"),
-        max(col("v")).as("max_v"))
-    phase1
-      .groupBy(col("key"), col("bucket"))
-      .agg(
-        sum(col("cnt")).as("cnt"),
-        sum(col("sum_d")).as("sum_d"),
-        sum(col("sumsq_d")).as("sumsq_d"),
-        min(col("min_v")).as("min_v"),
-        max(col("max_v")).as("max_v"))
+        saltCol.as("salt")))
+    Rollup.merge(phase1, col("key"), col("bucket"))
   }
 }

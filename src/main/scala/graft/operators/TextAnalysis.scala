@@ -20,13 +20,6 @@ object TextAnalysis {
     size(split(trim(text), "\\s+")) +
       when(length(trim(text)) === 0, -1).otherwise(0) // empty → 0
 
-  /** BPE-ish subword count: words plus punctuation/digit splits —
-    * a regex proxy for tokenizer granularity (counts runs of
-    * letters, runs of digits, and single punctuation marks). */
-  def subwordCount(text: Column): Column =
-    size(filter(split(lower(text), "(?=[^a-z0-9])|(?<=[^a-z0-9])"),
-      x => length(trim(x)) > 0))
-
   // ---- quality scoring -----------------------------------------------
 
   private val stopwords = Seq("the", "a", "an", "and", "or", "of", "to",
@@ -98,6 +91,8 @@ object TextAnalysis {
       ratesSixteenths: Map[String, Int]): DataFrame = {
     require(ratesSixteenths.values.forall(r => r >= 0 && r <= 16),
       "per-stratum rates are sixteenths in [0, 16]")
+    require(!docs.columns.contains("__stratum"),
+      "stratifiedSample stages the stratum in a column named __stratum; rename the input's")
     // Stage the stratum value ONCE per row behind an optimizer fence:
     // the keep condition below references it ~2× per stratum, and
     // filter pushdown would otherwise inline the caller's whole

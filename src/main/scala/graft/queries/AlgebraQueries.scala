@@ -200,9 +200,9 @@ object AlgebraQueries extends QuerySet {
         .select(col("doc_a"), col("doc_b"),
           round(col("jaccard"), 6).as("jaccard"), col("canonical_id")))),
     "q_tier_kll_cascade" -> ((s, dir) => {
-      val m1 = SketchedRollup.rollupRaw(eventPoints(s, dir), "minute")
-      val d1 = SketchedRollup.cascade(SketchedRollup.cascade(m1, "hour"), "day")
-      ordered(SketchedRollup.present(d1).select(
+      val m1 = Rollup.rollupRaw(eventPoints(s, dir), "minute", sketched = true)
+      val d1 = Rollup.cascade(Rollup.cascade(m1, "hour"), "day")
+      ordered(Rollup.presentSketched(d1).select(
         col("key"), col("bucket"), col("cnt"), col("kll_n"),
         round(col("p50"), 6).as("p50"), round(col("p90"), 6).as("p90")))
     }),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators._
-import graft.functions.{FreqAgg, KllAgg}
+import graft.functions.FreqAgg
 import Q._
 
 /** Codec + sketch queries. q_segment_roundtrip proves the Gorilla/DoD
@@ -30,22 +30,19 @@ object CodecQueries extends QuerySet {
     "q_kll_quantiles" -> ((s, dir) =>
       eventPoints(s, dir)
         .groupBy(col("key"))
-        .agg(KllAgg.kll_sketch(col("v")).as("sk"))
-        .select(col("key"),
-          KllAgg.kll_n(col("sk")).as("n"),
-          KllAgg.kll_quantile(col("sk"), 0.5).as("p50"),
-          KllAgg.kll_quantile(col("sk"), 0.9).as("p90"),
-          KllAgg.kll_quantile(col("sk"), 0.99).as("p99"))
+        .agg(Rollup.kllSketch(col("v")).as("sk"))
+        .select(col("key") +: Rollup.kllReads(col("sk")): _*)
+        .withColumnRenamed("kll_n", "n")
         .orderBy("key")),
     "q_kll_cascade" -> ((s, dir) =>
       // sketch per (key, day), merged up to key — the tier path
       eventPoints(s, dir)
         .groupBy(col("key"), date_trunc("day", col("ts")).as("bucket"))
-        .agg(KllAgg.kll_sketch(col("v")).as("sk"))
+        .agg(Rollup.kllSketch(col("v")).as("sk"))
         .groupBy(col("key"))
-        .agg(KllAgg.kll_merge(col("sk")).as("sk"))
-        .select(col("key"), KllAgg.kll_n(col("sk")).as("n"),
-          KllAgg.kll_quantile(col("sk"), 0.5).as("p50"))
+        .agg(Rollup.kllMerge(col("sk")).as("sk"))
+        .select(col("key") +: Rollup.kllReads(col("sk")): _*)
+        .select(col("key"), col("kll_n").as("n"), col("p50"))
         .orderBy("key")),
     // Frequent-items (heavy-hitter) sketch, certified in its EXACT
     // regime: 1500 distinct conv_ids per role ≤ 0.75·4096, so the

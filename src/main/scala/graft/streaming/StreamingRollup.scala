@@ -28,18 +28,11 @@ object StreamingRollup {
   /** Watermarked tumbling-window rollup over a streaming points
     * source `(key, ts, v)`; emits finalized windows (append mode). */
   def windowedRollup(points: DataFrame, watermark: String = "10 minutes"): DataFrame = {
-    val vd = col("v").cast("decimal(18,6)")
-    points
+    Rollup.partial(points
       .withWatermark("ts", watermark)
-      .groupBy(col("key"), window(col("ts"), "1 minute"))
-      .agg(
-        count(lit(1)).as("cnt"),
-        sum(vd).as("sum_d"),
-        sum(vd * vd).as("sumsq_d"),
-        min(col("v")).as("min_v"),
-        max(col("v")).as("max_v"))
-      .select(col("key"), col("window.start").as("bucket"),
-        col("cnt"), col("sum_d"), col("sumsq_d"), col("min_v"), col("max_v"))
+      .groupBy(col("key"), window(col("ts"), "1 minute")))
+      .withColumn("window", col("window.start")) // in place: keeps column order
+      .withColumnRenamed("window", "bucket")
   }
 
   /** foreachBatch writer MERGEing each micro-batch into the tier

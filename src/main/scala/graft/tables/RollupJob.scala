@@ -175,22 +175,14 @@ final class RollupJob(spark: SparkSession, root: String, nBuckets: Int = 16) {
     labels.foreach { label =>
       val lineage = s"$runId/$label"
       val dayPts = batchSlice(points, label, batchUnit)
-      val m1 =
-        (if (sketched) graft.operators.SketchedRollup.rollupRaw(dayPts, "minute")
-         else Rollup.rollupRaw(dayPts, "minute"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
+      val m1 = Rollup.rollupRaw(dayPts, "minute", sketched)
+        .persist(StorageLevel.MEMORY_AND_DISK)
       try {
         tier1m.merge(m1, lineage) // materializes m1 (one raw scan)
-        val h1 =
-          (if (sketched) graft.operators.SketchedRollup.cascade(m1, "hour")
-           else Rollup.cascade(m1, "hour"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
+        val h1 = Rollup.cascade(m1, "hour").persist(StorageLevel.MEMORY_AND_DISK)
         try {
           tier1h.merge(h1, lineage)
-          val d1 =
-            if (sketched) graft.operators.SketchedRollup.cascade(h1, "day")
-            else Rollup.cascade(h1, "day")
-          tier1d.merge(d1, lineage)
+          tier1d.merge(Rollup.cascade(h1, "day"), lineage)
         } finally h1.unpersist(false)
       } finally m1.unpersist(false)
     }

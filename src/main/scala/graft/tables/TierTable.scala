@@ -5,6 +5,7 @@ import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.Rollup
 
 /** Iceberg-semantics tier table: parquet data files + JSON snapshot
   * manifests with atomic commit, hidden partitioning, incremental
@@ -416,8 +417,8 @@ class TierTable(spark: SparkSession, root: String, nBuckets: Int = 16,
       .withColumn("pb", pmod(xxhash64(col("key")), lit(nBuckets.toLong)).cast("int"))
       .withColumn("pd", date_format(col("bucket"), "yyyy-MM-dd"))
 
-  /** Incremental MERGE of partial rollup rows (schema: key, bucket,
-    * cnt, sum_d, sumsq_d, min_v, max_v) into the tier.
+  /** Incremental MERGE of partial rollup rows (key, bucket and the
+    * stat set of [[Rollup]], optionally sketched) into the tier.
     *
     * Steps: 1) affected partitions = distinct (pb, pd) of the update;
     * 2) combined = (existing rows of affected ∪ updates) re-merged on
@@ -477,21 +478,7 @@ class TierTable(spark: SparkSession, root: String, nBuckets: Int = 16,
         case Some(ex) => ex.unionByName(updTodo)
         case None => updTodo
       }
-      // optional percentile-sketch column merges right alongside the
-      // exact sums (kll is mergeable — FIXTURES.md §A.2 tier row)
-      val baseAggs = Seq(
-        sum(col("cnt")).as("cnt"),
-        sum(col("sum_d")).as("sum_d"),
-        sum(col("sumsq_d")).as("sumsq_d"),
-        min(col("min_v")).as("min_v"),
-        max(col("max_v")).as("max_v"))
-      val aggs =
-        if (upd.columns.contains("kll"))
-          baseAggs :+ graft.functions.KllAgg.kll_merge(col("kll")).as("kll")
-        else baseAggs
-      val merged = combined
-        .groupBy(col("pb"), col("pd"), col("key"), col("bucket"))
-        .agg(aggs.head, aggs.tail: _*)
+      val merged = Rollup.merge(combined, col("pb"), col("pd"), col("key"), col("bucket"))
 
       // attempt-unique data dir: a CAS loser or crashed writer can
       // never have written into a directory a committed manifest
@@ -612,7 +599,7 @@ class TierTable(spark: SparkSession, root: String, nBuckets: Int = 16,
 
   /** Predicate DELETE — the general Iceberg `DELETE WHERE` analog:
     * remove every row matching `pred` (an expression over the tier's
-    * DATA columns: key, bucket, cnt, sums, …) by rewriting only the
+    * DATA columns: key, bucket and the rollup stats) by rewriting only the
     * partitions that actually hold a matching row. Without a key list
     * there is no manifest-level bucket pruning, but the discovery scan
     * still pushes `pred` into parquet (column min/max prune row

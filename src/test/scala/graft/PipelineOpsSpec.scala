@@ -702,6 +702,13 @@ class PipelineOpsSpec extends SparkSpecBase {
     }
   }
 
+  test("stratifiedSample rejects an input column named __stratum instead of clobbering it") {
+    val docs = Seq((1L, "en", "mine")).toDF("doc_id", "stratum", "__stratum")
+    val e = intercept[IllegalArgumentException](
+      TextAnalysis.stratifiedSample(docs, col("stratum"), col("doc_id"), Map("en" -> 8)))
+    assert(e.getMessage.contains("__stratum"))
+  }
+
   test("tokenBudgetMix: integer rates from weights + budget, cap at 16, unmapped dropped") {
     // 3 sources × 400 docs × 10 tokens each → 4000 tokens available per source
     val docs = (0 until 1200).map(i =>

@@ -129,16 +129,17 @@ class PlanSpec extends SparkSpecBase {
   }
 
   test("RollupJob batch slice pushes a ts range into the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("plan_batch").toString
-    Q.eventPoints(spark, sf("sf0.001")).write.mode("overwrite").parquet(dir)
-    val pts = spark.read.parquet(dir)
-    // mirror RollupJob.batchSlice on one day label
-    val tsType = pts.schema("ts").dataType
-    val sliced = pts.where(col("ts") >= lit("2024-01-05 00:00:00").cast(tsType) &&
-      col("ts") < lit("2024-01-06 00:00:00").cast(tsType))
-    val plan = planOf(Rollup.rollupRaw(sliced, "minute"))
-    assert(plan.contains("PushedFilters: [IsNotNull(ts), GreaterThanOrEqual(ts"),
-      s"batch range not pushed:\n$plan")
+    withTempDir("plan_batch") { dir =>
+      Q.eventPoints(spark, sf("sf0.001")).write.mode("overwrite").parquet(dir)
+      val pts = spark.read.parquet(dir)
+      // mirror RollupJob.batchSlice on one day label
+      val tsType = pts.schema("ts").dataType
+      val sliced = pts.where(col("ts") >= lit("2024-01-05 00:00:00").cast(tsType) &&
+        col("ts") < lit("2024-01-06 00:00:00").cast(tsType))
+      val plan = planOf(Rollup.rollupRaw(sliced, "minute"))
+      assert(plan.contains("PushedFilters: [IsNotNull(ts), GreaterThanOrEqual(ts"),
+        s"batch range not pushed:\n$plan")
+    }
   }
 
   test("stratifiedSample: derived stratum evaluated once, not inlined into the Filter (r6 barrier)") {
@@ -147,41 +148,42 @@ class PlanSpec extends SparkSpecBase {
     // token filter. Filter pushdown has no cost guard and would
     // inline it once per reference into the scan Filter (measured 8
     // copies / 3.5× row cost on q_stratified_sample before the fix).
-    val dir = java.nio.file.Files.createTempDirectory("plan_strat").toString
-    (0 until 400).map(i =>
-      (i.toLong, if (i % 2 == 0) "the and of to is" else "el la que y en"))
-      .toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
-    val docs = spark.read.parquet(dir)
-    val stratum = when(
-      size(filter(split(lower(col("text")), "\\s+"),
-        t => t.isInCollection(Seq("the", "and", "of")))) >= 2, "en")
-      .otherwise("und")
-    val staged = docs.select(col("doc_id"), stratum.as("s"))
-    val rates = Map("en" -> 4, "und" -> 9)
-    val df = TextAnalysis.stratifiedSample(staged, col("s"), col("doc_id"), rates)
-    // plan gate: no Filter condition carries the lambda, and exactly
-    // one copy of the stratum expression survives in the whole plan
-    val filters = df.queryExecution.optimizedPlan.collect {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition.toString
+    withTempDir("plan_strat") { dir =>
+      (0 until 400).map(i =>
+        (i.toLong, if (i % 2 == 0) "the and of to is" else "el la que y en"))
+        .toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
+      val docs = spark.read.parquet(dir)
+      val stratum = when(
+        size(filter(split(lower(col("text")), "\\s+"),
+          t => t.isInCollection(Seq("the", "and", "of")))) >= 2, "en")
+        .otherwise("und")
+      val staged = docs.select(col("doc_id"), stratum.as("s"))
+      val rates = Map("en" -> 4, "und" -> 9)
+      val df = TextAnalysis.stratifiedSample(staged, col("s"), col("doc_id"), rates)
+      // plan gate: no Filter condition carries the lambda, and exactly
+      // one copy of the stratum expression survives in the whole plan
+      val filters = df.queryExecution.optimizedPlan.collect {
+        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition.toString
+      }
+      assert(filters.nonEmpty && filters.forall(!_.contains("lambdafunction")),
+        s"stratum expression inlined into a Filter:\n${filters.mkString("\n")}")
+      val optimized = df.queryExecution.optimizedPlan.toString
+      assert(countOccurrences(optimized, "lambdafunction") == 1,
+        s"stratum expression duplicated:\n$optimized")
+      assert(optimized.contains("opt_barrier"), s"barrier optimized away:\n$optimized")
+      // result gate: identical row set to the pre-barrier formulation
+      // (the naive where over the raw stratum expression)
+      val hexChars = "0123456789abcdefg"
+      val nib = substring(md5(concat(stratum, lit(":"), col("doc_id").cast("string"))), 1, 1)
+      val naiveKeep = rates.toSeq.sortBy(_._1).foldRight(lit(true)) {
+        case ((sv, r), els) =>
+          when(stratum === sv, nib < lit(hexChars.charAt(r).toString)).otherwise(els)
+      }
+      val expected = docs.where(naiveKeep).select(col("doc_id"), stratum.as("s"))
+        .as[(Long, String)].collect().toSeq.sorted
+      val got = df.as[(Long, String)].collect().toSeq.sorted
+      assert(got == expected, s"row set diverged: got ${got.size}, expected ${expected.size}")
     }
-    assert(filters.nonEmpty && filters.forall(!_.contains("lambdafunction")),
-      s"stratum expression inlined into a Filter:\n${filters.mkString("\n")}")
-    val optimized = df.queryExecution.optimizedPlan.toString
-    assert(countOccurrences(optimized, "lambdafunction") == 1,
-      s"stratum expression duplicated:\n$optimized")
-    assert(optimized.contains("opt_barrier"), s"barrier optimized away:\n$optimized")
-    // result gate: identical row set to the pre-barrier formulation
-    // (the naive where over the raw stratum expression)
-    val hexChars = "0123456789abcdefg"
-    val nib = substring(md5(concat(stratum, lit(":"), col("doc_id").cast("string"))), 1, 1)
-    val naiveKeep = rates.toSeq.sortBy(_._1).foldRight(lit(true)) {
-      case ((sv, r), els) =>
-        when(stratum === sv, nib < lit(hexChars.charAt(r).toString)).otherwise(els)
-    }
-    val expected = docs.where(naiveKeep).select(col("doc_id"), stratum.as("s"))
-      .as[(Long, String)].collect().toSeq.sorted
-    val got = df.as[(Long, String)].collect().toSeq.sorted
-    assert(got == expected, s"row set diverged: got ${got.size}, expected ${expected.size}")
   }
 
   test("whole-stage codegen covers the rollup aggregate") {

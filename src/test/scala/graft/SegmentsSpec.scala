@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.model.Point
 import graft.operators._
-import graft.functions.{FreqAgg, KllAgg}
+import graft.functions.FreqAgg
 import graft.local.LocalOracle
 
 /** Segment encode/decode round trip through the Spark plan, and KLL
@@ -36,17 +36,45 @@ class SegmentsSpec extends SparkSpecBase {
   test("KLL sketch: exact quantiles below compaction, close above") {
     val xs = (1 to 150).map(_.toDouble)
     val df = xs.map(v => Point("a", t(v.toLong), v)).toDF()
-    val sk = df.agg(KllAgg.kll_sketch(col("v")).as("sk"))
-      .select(KllAgg.kll_quantile(col("sk"), 0.5).as("med"),
-        KllAgg.kll_n(col("sk")).as("n"))
+    val sk = df.agg(Rollup.kllSketch(col("v")).as("sk"))
+      .select(kll_sketch_get_quantile_double(col("sk"), lit(0.5)).as("med"),
+        kll_sketch_get_n_double(col("sk")).as("n"))
       .collect().head
     assert(sk.getAs[Long]("n") == 150L)
     assert(math.abs(sk.getAs[Double]("med") - 75.0) <= 1.0)
     // large n: rank error within KLL k=200 bound (~1.65%)
     val big = (1 to 50000).map(i => Point("b", t(i.toLong), i.toDouble)).toDF()
-    val q = big.agg(KllAgg.kll_sketch(col("v")).as("sk"))
-      .select(KllAgg.kll_quantile(col("sk"), 0.9).as("p90")).collect().head.getDouble(0)
+    val q = big.agg(Rollup.kllSketch(col("v")).as("sk"))
+      .select(kll_sketch_get_quantile_double(col("sk"), lit(0.9)).as("p90"))
+      .collect().head.getDouble(0)
     assert(math.abs(q - 45000.0) / 50000.0 < 0.02, s"p90=$q")
+  }
+
+  test("KLL format pin: exact-regime sketch bytes are datasketches' KllDoublesSketch(k = 200)") {
+    // Stored tiers stay mergeable only while the sketch column keeps
+    // this serialized form. One partition: the partial sketch is the
+    // values updated in arrival order, and the final aggregate merges
+    // it into an empty sketch (KLL's merge replays level 0 newest
+    // first, so this equals a direct update in reverse order).
+    import org.apache.datasketches.kll.KllDoublesSketch
+    import org.apache.datasketches.memory.Memory
+    def mergedIntoEmpty(sk: KllDoublesSketch): KllDoublesSketch = {
+      val m = KllDoublesSketch.newHeapInstance(200)
+      m.merge(sk)
+      m
+    }
+    val xs = (0 until 150).map(i => ((i * 37) % 150) / 8.0)
+    val got = xs.toDF("v").coalesce(1).agg(Rollup.kllSketch(col("v")))
+      .head().getAs[Array[Byte]](0)
+    val partial = KllDoublesSketch.newHeapInstance(200)
+    xs.foreach(partial.update)
+    assert(got.sameElements(mergedIntoEmpty(partial).toByteArray))
+    // a stored sketch re-merged by the tier path (partial merge, then
+    // final merge) keeps the same form
+    val remerged = Seq(Tuple1(got)).toDF("sk").agg(Rollup.kllMerge(col("sk")))
+      .head().getAs[Array[Byte]](0)
+    val want = mergedIntoEmpty(mergedIntoEmpty(KllDoublesSketch.heapify(Memory.wrap(got))))
+    assert(remerged.sameElements(want.toByteArray))
   }
 
   test("frequent-items sketch: exact below purge threshold, bounded error above, cascade merge") {
@@ -102,15 +130,15 @@ class SegmentsSpec extends SparkSpecBase {
     }.toDF()
     // per-minute sketches merged up to one per key == direct per-key sketch (same n)
     val perMin = pts.groupBy(col("key"), date_trunc("hour", col("ts")).as("b"))
-      .agg(KllAgg.kll_sketch(col("v")).as("sk"))
+      .agg(Rollup.kllSketch(col("v")).as("sk"))
     val merged = perMin.groupBy(col("key"))
-      .agg(KllAgg.kll_merge(col("sk")).as("sk"))
-      .select(col("key"), KllAgg.kll_n(col("sk")).as("n"),
-        KllAgg.kll_quantile(col("sk"), 0.5).as("med"))
+      .agg(Rollup.kllMerge(col("sk")).as("sk"))
+      .select(col("key"), kll_sketch_get_n_double(col("sk")).as("n"),
+        kll_sketch_get_quantile_double(col("sk"), lit(0.5)).as("med"))
     val direct = pts.groupBy(col("key"))
-      .agg(KllAgg.kll_sketch(col("v")).as("sk"))
-      .select(col("key"), KllAgg.kll_n(col("sk")).as("n"),
-        KllAgg.kll_quantile(col("sk"), 0.5).as("dmed"))
+      .agg(Rollup.kllSketch(col("v")).as("sk"))
+      .select(col("key"), kll_sketch_get_n_double(col("sk")).as("n"),
+        kll_sketch_get_quantile_double(col("sk"), lit(0.5)).as("dmed"))
     val j = merged.join(direct, "key").collect()
     assert(j.nonEmpty)
     j.foreach { r =>

@@ -33,9 +33,9 @@ class SeriesAlgebraSpec extends SparkSpecBase {
     val p = (0 until 2000).map { i =>
       Point(s"k${i % 3}", t(i * 97), ((i * 31) % 500) / 4.0)
     }.toDF()
-    val m1 = SketchedRollup.rollupRaw(p, "minute")
-    val d1 = SketchedRollup.cascade(SketchedRollup.cascade(m1, "hour"), "day")
-    val pres = SketchedRollup.present(d1).collect()
+    val m1 = Rollup.rollupRaw(p, "minute", sketched = true)
+    val d1 = Rollup.cascade(Rollup.cascade(m1, "hour"), "day")
+    val pres = Rollup.presentSketched(d1).collect()
     assert(pres.nonEmpty)
     pres.foreach { r =>
       assert(r.getAs[Long]("kll_n") == r.getAs[Long]("cnt"))
@@ -44,7 +44,7 @@ class SeriesAlgebraSpec extends SparkSpecBase {
     }
     // quantile sanity vs exact percentile on a single bucket
     val one = (0 until 150).map(i => Point("z", t(i.toLong), i.toDouble)).toDF()
-    val pr = SketchedRollup.present(SketchedRollup.rollupRaw(one, "day")).collect().head
+    val pr = Rollup.presentSketched(Rollup.rollupRaw(one, "day", sketched = true)).collect().head
     assert(math.abs(pr.getAs[Double]("p50") - 74.5) <= 1.5)
   }
 

@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 import graft.api.Series
 import graft.local.LocalOracle
 import graft.tables.RollupJob
-import graft.functions.KllAgg
 
 /** Fluent API chains (thunder-style method chaining) + sketched tier
   * cascade through TierTable MERGE. */
@@ -67,22 +66,34 @@ class SeriesApiSpec extends SparkSpecBase {
   }
 
   test("sketched cascade via RollupJob: tier tables carry mergeable kll") {
-    val root = java.nio.file.Files.createTempDirectory("graft_skt").toString
-    val pts = (0 until 2000).map { i =>
-      model.Point(s"k${i % 3}", t(i * 311), ((i * 131) % 700) / 4.0)
-    }.toDF()
-    val job = new RollupJob(spark, root, nBuckets = 4)
-    job.run(pts, "skt", sketched = true)
-    val d = job.tier1d.read()
-    assert(d.columns.contains("kll"))
-    val rows = d.select(col("cnt"), KllAgg.kll_n(col("kll")).as("n"),
-      KllAgg.kll_quantile(col("kll"), 0.5).as("p50"),
-      col("min_v"), col("max_v")).collect()
-    assert(rows.nonEmpty)
-    rows.foreach { r =>
-      assert(r.getAs[Long]("cnt") == r.getAs[Long]("n")) // sketch saw every point
-      val p50 = r.getAs[Double]("p50")
-      assert(p50 >= r.getAs[Double]("min_v") && p50 <= r.getAs[Double]("max_v"))
+    withTempDir("graft_skt") { root =>
+      val pts = (0 until 2000).map { i =>
+        model.Point(s"k${i % 3}", t(i * 311), ((i * 131) % 700) / 4.0)
+      }.toDF()
+      val job = new RollupJob(spark, root, nBuckets = 4)
+      job.run(pts, "skt", sketched = true)
+      // a second arrival into the same (key, bucket)s: every tier's
+      // MERGE re-merges the stored sketches with the new ones
+      val late = (0 until 300).map { i =>
+        model.Point(s"k${i % 3}", t(i * 311 + 7), ((i * 17) % 300) / 4.0)
+      }.toDF()
+      job.run(late, "skt-late", sketched = true)
+      Seq(job.tier1m, job.tier1h, job.tier1d).foreach { tier =>
+        val d = tier.read()
+        assert(d.columns.contains("kll"))
+        val rows = d.select(col("cnt"), kll_sketch_get_n_double(col("kll")).as("n"),
+          kll_sketch_get_quantile_double(col("kll"), lit(0.5)).as("p50"),
+          col("min_v"), col("max_v")).collect()
+        assert(rows.map(_.getAs[Long]("cnt")).sum == 2300L)
+        rows.foreach { r =>
+          assert(r.getAs[Long]("cnt") == r.getAs[Long]("n")) // sketch saw every point
+          val p50 = r.getAs[Double]("p50")
+          assert(p50 >= r.getAs[Double]("min_v") && p50 <= r.getAs[Double]("max_v"))
+        }
+      }
+      // the late points landed in minutes the first arrival already held
+      val m = job.tier1m.read()
+      assert(m.where(col("cnt") > 1).count() > 0)
     }
   }
 }

@@ -23,6 +23,13 @@ abstract class SparkSpecBase extends AnyFunSuite {
   def t(secs: Long): java.sql.Timestamp =
     new java.sql.Timestamp(1704067200000L + secs * 1000L) // 2024-01-01T00:00:00Z
 
+  /** Runs `f` on a fresh temp directory and deletes it afterwards. */
+  def withTempDir[T](prefix: String)(f: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try f(dir.toString)
+    finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
   def assertClose(a: Double, b: Double, tol: Double = 1e-9): Unit =
     assert(math.abs(a - b) <= tol * math.max(1.0, math.max(math.abs(a), math.abs(b))),
       s"$a !~ $b")
