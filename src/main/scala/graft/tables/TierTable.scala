@@ -453,9 +453,7 @@ class TierTable(spark: SparkSession, root: String, nBuckets: Int = 16,
     try {
       val affected = upd.select("pb", "pd").distinct().collect()
         .map(r => (r.getInt(0), r.getString(1))).toSet
-      val doneForRun = resolved.collect {
-        case (part, e) if e.runIds.contains(runId) => part
-      }.toSet
+      val doneForRun = resolved.keySet.filter(resolved(_).runIds.contains(runId))
       val todo = affected -- doneForRun
       if (todo.isEmpty) { // empty batch or fully resumed: publish nothing
         return currentManifest.getOrElse(Manifest(-1, -1, full = true, Nil))
@@ -463,7 +461,9 @@ class TierTable(spark: SparkSession, root: String, nBuckets: Int = 16,
       val todoDf = todo.toSeq.toDF_(spark)
 
       val existingAffected: Option[DataFrame] = {
-        val dirs = todo.toSeq.flatMap(resolved.get).map(e => s"$root/${e.dir}")
+        // a zero-row marker (dir = "") has nothing to carry into the merge
+        val dirs = todo.toSeq.flatMap(resolved.get).filter(_.dir.nonEmpty)
+          .map(e => s"$root/${e.dir}")
         // leaf-dir reads drop the hive-style partition columns;
         // recompute them — pb/pd are pure functions of (key, bucket)
         if (dirs.isEmpty) None else Some(withPartCols(spark.read.parquet(dirs: _*)))
@@ -659,9 +659,7 @@ class TierTable(spark: SparkSession, root: String, nBuckets: Int = 16,
     val touched = cand
       .filter(e => hitFiles.exists(_.contains(s"/${e.dir}/")))
       .map(e => (e.pb, e.pd)).toSet
-    val doneForRun = resolved.collect {
-      case (part, e) if e.runIds.contains(runId) => part
-    }.toSet
+    val doneForRun = resolved.keySet.filter(resolved(_).runIds.contains(runId))
     val todo = touched -- doneForRun
     if (todo.isEmpty) return noop
 
