@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 import graft.operators.Rollup
-import graft.tables.TierTable
+import graft.tables.RollupJob
 
 /** Streaming ingestion of the rollup cascade (SURVEY.md §2.4: thunder
   * 1.x is batch-only; our Spark-first engine adds the Structured
@@ -36,32 +36,16 @@ object StreamingRollup {
   }
 
   /** foreachBatch writer MERGEing each micro-batch into the tier
-    * tables rooted at `root`. Lineage = runId/batchId → restartable
-    * streams don't double-merge a replayed batch. */
+    * tables rooted at `root` through [[RollupJob.mergeBatch]], the same
+    * per-batch cascade the batch job runs. Lineage = runId/batchId →
+    * restartable streams don't double-merge a replayed batch. */
   def cascadeWriter(points: DataFrame, root: String, runId: String,
       nBuckets: Int = 8): DataStreamWriter[org.apache.spark.sql.Row] = {
     points.writeStream
       .outputMode(OutputMode.Update)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val t1m = new TierTable(spark, s"$root/tier_1m", nBuckets)
-        val t1h = new TierTable(spark, s"$root/tier_1h", nBuckets)
-        val t1d = new TierTable(spark, s"$root/tier_1d", nBuckets)
-        val lineage = s"$runId/$batchId"
-        // persist the partials so each micro-batch is read once, not
-        // re-executed per tier (same fix as RollupJob.run)
-        val m1 = Rollup.rollupRaw(batch, "minute")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          t1m.merge(m1, lineage)
-          val h1 = Rollup.cascade(m1, "hour")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            t1h.merge(h1, lineage)
-            t1d.merge(Rollup.cascade(h1, "day"), lineage)
-          } finally h1.unpersist(false)
-        } finally m1.unpersist(false)
-        ()
+        new RollupJob(batch.sparkSession, root, nBuckets)
+          .mergeBatch(batch, s"$runId/$batchId")
       }
       .trigger(Trigger.AvailableNow())
   }

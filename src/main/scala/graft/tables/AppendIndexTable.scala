@@ -2,6 +2,7 @@ package graft.tables
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import TierTable.PartEntry
 
 /** Append-only batch table over the TierTable commit machinery:
   * atomic single-link commits, delta manifests with periodic FULL
@@ -17,9 +18,8 @@ import org.apache.spark.sql.functions._
   * whole-batch: a runId that already committed is skipped entirely
   * (the batch's write is atomic — either its manifest link landed or
   * its nonce'd data dir is an invisible orphan). */
-class AppendIndexTable(spark: SparkSession, root: String, nBuckets: Int = 16,
-    compactEvery: Int = 8)
-  extends TierTable(spark, root, nBuckets, compactEvery) {
+class AppendIndexTable(spark: SparkSession, root: String, nBuckets: Int = 16)
+  extends TierTable(spark, root, nBuckets) {
 
   /** True if `runId` already committed (crash-resume: skip). */
   def committed(runId: String): Boolean =
@@ -28,52 +28,38 @@ class AppendIndexTable(spark: SparkSession, root: String, nBuckets: Int = 16,
   /** Append one batch atomically; rows are hash-distributed on
     * `hashCol` into `nBuckets` pb partitions (co-locating downstream
     * joins on that column). Returns false when the runId had already
-    * committed (resumed no-op); an EMPTY batch commits a zero-row
-    * marker entry recording the runId — counted BEFORE any write, so
-    * no orphan data dir is ever produced, and `committed(runId)`
-    * turns true (a crash-resume driver that retries until committed()
-    * would otherwise loop forever, leaking one orphan per retry). */
+    * committed (resumed no-op). Per-pb row counts come from the
+    * written parquet footers, so the batch is computed once. An EMPTY
+    * batch deletes its empty attempt dir and commits a zero-row marker
+    * entry recording the runId, so no orphan data dir is left and
+    * `committed(runId)` turns true (a crash-resume driver that retries
+    * until committed() would otherwise loop forever). */
   def append(rows: DataFrame, runId: String, hashCol: String): Boolean = {
-    if (committed(runId)) return false
-    val prev = readableHead
-    val newVersion = currentVersion + 1
-    val makeFull = newVersion % compactEvery == 0
-    val outDir = s"data/v$newVersion-${nonce()}"
-    val withPb = rows
-      .withColumn("pb", pmod(xxhash64(col(hashCol)), lit(nBuckets.toLong)).cast("int"))
-      .cache()
-    try {
-      // count FIRST (one pass over the cached batch): an empty batch
-      // must short-circuit before the write or its nonce'd dir is an
-      // orphan until vacuum
-      val counts = withPb.groupBy("pb").count().collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap
-      // pd is the batch label (unique per commit), so entries from
-      // different batches never collide in the resolver's (pb, pd) map
-      val pd = s"batch-v$newVersion"
-      val newEntries =
-        if (counts.isEmpty)
-          // zero-row marker: dir = "" (readEntries skips empty dirs),
-          // lineage records the runId so the empty batch is resumable
-          Seq(PartEntry(0, pd, "", 0L, 0L, Seq(runId)))
-        else {
-          withPb.repartition(col("pb")).write
-            .partitionBy("pb")
-            .mode(SaveMode.Overwrite)
-            .parquet(s"$root/$outDir")
-          counts.keys.toSeq.sorted.map { pb =>
-            val dir = s"$outDir/pb=$pb"
-            PartEntry(pb, pd, dir, counts(pb),
-              dirSize(java.nio.file.Paths.get(root).resolve(dir)), Seq(runId))
-          }
-        }
-      val entries =
-        if (makeFull) resolvedEntries ++ newEntries
-        else newEntries
-      commit(Manifest(newVersion, prev, makeFull, entries))
-      true
-    } finally withPb.unpersist()
+    val a = new Attempt
+    if (a.live.exists(_.runIds.contains(runId))) return false
+    rows.withColumn("pb", pmod(xxhash64(col(hashCol)), lit(nBuckets.toLong)).cast("int"))
+      .repartition(col("pb")).write
+      .partitionBy("pb")
+      .mode(SaveMode.Overwrite)
+      .parquet(s"$root/${a.outDir}")
+    // pd is the batch label (unique per commit), so entries from
+    // different batches never collide in the resolver's (pb, pd) map
+    val pd = s"batch-v${a.version}"
+    val written = writtenBuckets(a)
+    val entries =
+      if (written.isEmpty) Seq(PartEntry(0, pd, "", 0L, 0L, Seq(runId)))
+      else parallelMap(written)(pb => writtenEntry(pb, pd, s"${a.outDir}/pb=$pb", Seq(runId)))
+    dropEmptyAttempt(a, entries)
+    publish(a, entries)
+    true
   }
+
+  /** The pb buckets an attempt's write produced, ascending. */
+  private def writtenBuckets(a: Attempt): Seq[Int] =
+    listDir(java.nio.file.Paths.get(root).resolve(a.outDir))
+      .map(_.getFileName.toString)
+      .collect { case s"pb=$pb" => pb.toInt }
+      .sorted
 
   /** Data-file compaction — the Iceberg `rewriteDataFiles` analog for
     * this table shape. Every append (and every streaming micro-batch
@@ -92,13 +78,12 @@ class AppendIndexTable(spark: SparkSession, root: String, nBuckets: Int = 16,
     *     UNION of all replaced entries' runIds on a zero-row marker
     *     entry, so `committed(runId)` stays true for every batch ever
     *     appended and crash-resume drivers keep their contract;
-    *   - per-pb row counts come from the replaced entries' manifest
-    *     metrics (exact, summed) — compaction runs ZERO count jobs;
-    *   - concurrency rides the version CAS: `newVersion` is claimed
-    *     BEFORE the entry set is resolved, so a racing append commits
-    *     first and this compaction loses with
-    *     [[TierTable.CommitConflictException]] (retry later — never a
-    *     silently dropped batch);
+    *   - per-pb row counts come from the written parquet footers —
+    *     compaction runs ZERO count jobs;
+    *   - concurrency rides the commit guard: an append that commits
+    *     after this compaction resolved its entry set makes the
+    *     compaction lose with [[TierTable.CommitConflictException]]
+    *     (retry later — never a silently dropped batch);
     *   - superseded per-batch dirs stay referenced by older manifests
     *     (time travel intact) until [[expireSnapshots]] +
     *     [[vacuum]] reclaim them — the standard maintenance trio.
@@ -106,16 +91,12 @@ class AppendIndexTable(spark: SparkSession, root: String, nBuckets: Int = 16,
     * Returns false (no commit) when the live entry set is already a
     * single consolidated generation or holds no data rows. */
   def compact(): Boolean = {
-    val prev = readableHead
-    if (prev < 0) return false
-    val newVersion = currentVersion + 1
-    val entries = resolvedEntries
-    val dataEntries = entries.filter(_.dir.nonEmpty)
+    val a = new Attempt
+    val dataEntries = a.live.filter(_.dir.nonEmpty)
     // one pd generation = nothing to consolidate (markers alone too)
     if (dataEntries.isEmpty || dataEntries.map(_.pd).distinct.size <= 1)
       return false
-    val outDir = s"data/compact-v$newVersion-${nonce()}"
-    val pd = s"compact-v$newVersion"
+    val pd = s"compact-v${a.version}"
     // group the replaced dirs by pb and rebuild the pb column from the
     // manifest (leaf `pb=N` dirs don't self-describe their partition
     // value): one union-read + one partitioned write, no shuffle
@@ -128,17 +109,16 @@ class AppendIndexTable(spark: SparkSession, root: String, nBuckets: Int = 16,
       .repartition(col("pb")).write
       .partitionBy("pb")
       .mode(SaveMode.Overwrite)
-      .parquet(s"$root/$outDir")
-    val consolidated = byPb.map { case (pb, es) =>
-      val dir = s"$outDir/pb=$pb"
-      PartEntry(pb, pd, dir, es.map(_.rows).sum,
-        dirSize(java.nio.file.Paths.get(root).resolve(dir)), Seq(pd))
-    }
-    // zero-row lineage marker carrying every replaced runId (distinct
-    // pd so it never collides with a data entry in the resolver)
+      .parquet(s"$root/${a.outDir}")
+    val consolidated = parallelMap(byPb.map(_._1))(pb =>
+      writtenEntry(pb, pd, s"${a.outDir}/pb=$pb", Seq(pd)))
+    // zero-row lineage marker carrying EVERY replaced runId, uncapped:
+    // a dropped id would turn committed(runId) false and let an old
+    // batch append twice (distinct pd so it never collides with a data
+    // entry in the resolver)
     val lineage = PartEntry(0, s"$pd-lineage", "", 0L, 0L,
-      entries.flatMap(_.runIds).distinct)
-    commit(Manifest(newVersion, prev, full = true, consolidated :+ lineage))
+      a.live.flatMap(_.runIds).distinct)
+    publish(a, consolidated :+ lineage, dropped = _ => true)
     true
   }
 }

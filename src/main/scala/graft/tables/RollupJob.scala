@@ -171,20 +171,26 @@ final class RollupJob(spark: SparkSession, root: String, nBuckets: Int = 16) {
     Seq(tier1m, tier1h, tier1d).foreach(_.expireSnapshots(keepLast))
 
   private def runBatches(points: DataFrame, runId: String, labels: Seq[String],
-      batchUnit: String, sketched: Boolean): Unit = {
+      batchUnit: String, sketched: Boolean): Unit =
     labels.foreach { label =>
-      val lineage = s"$runId/$label"
-      val dayPts = batchSlice(points, label, batchUnit)
-      val m1 = Rollup.rollupRaw(dayPts, "minute", sketched)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        tier1m.merge(m1, lineage) // materializes m1 (one raw scan)
-        val h1 = Rollup.cascade(m1, "hour").persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          tier1h.merge(h1, lineage)
-          tier1d.merge(Rollup.cascade(h1, "day"), lineage)
-        } finally h1.unpersist(false)
-      } finally m1.unpersist(false)
+      mergeBatch(batchSlice(points, label, batchUnit), s"$runId/$label", sketched)
     }
+
+  /** MERGE one batch of raw points into all three tiers under
+    * `lineage`: the 1m partials are persisted before the 1m merge
+    * materializes them, and the 1h partials before the 1h merge, so the
+    * batch is read once and each coarser tier cascades from the cached
+    * finer one. */
+  def mergeBatch(points: DataFrame, lineage: String, sketched: Boolean = false): Unit = {
+    val m1 = Rollup.rollupRaw(points, "minute", sketched)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      tier1m.merge(m1, lineage) // materializes m1 (one raw scan)
+      val h1 = Rollup.cascade(m1, "hour").persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        tier1h.merge(h1, lineage)
+        tier1d.merge(Rollup.cascade(h1, "day"), lineage)
+      } finally h1.unpersist(false)
+    } finally m1.unpersist(false)
   }
 }

@@ -1,11 +1,15 @@
 package graft.tables
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import com.fasterxml.jackson.core.JsonProcessingException
+import com.fasterxml.jackson.databind.{DeserializationFeature, MapperFeature}
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Rollup
+import TierTable.{Manifest, PartEntry}
 
 /** Iceberg-semantics tier table: parquet data files + JSON snapshot
   * manifests with atomic commit, hidden partitioning, incremental
@@ -56,20 +60,25 @@ import graft.operators.Rollup
   *   - resume: every committed partition records its runId lineage
   *     (a real JSON array — ids survive any character) — a re-run of
   *     a runId skips partitions that already include it, even if
-  *     OTHER runs committed to the same partition in between. Lineage
-  *     is compacted to the most recent `maxLineage` runIds at full
-  *     snapshots (so it cannot grow without bound); the documented
-  *     contract is therefore: resume is idempotent for any runId
-  *     within the last `maxLineage` runs that touched the partition.
+  *     OTHER runs committed to the same partition in between. A
+  *     writer appending a runId keeps only the most recent
+  *     [[TierTable.MaxLineage]] (so lineage cannot grow without
+  *     bound); the documented contract is therefore: resume is
+  *     idempotent for any runId within the last 256 runs that touched
+  *     the partition.
   *   - empty merges (no rows, or fully-resumed batch) publish
   *     nothing: no version churn from calendar-enumerated empty
   *     batches or replayed micro-batches.
+  *
+  * Every writer commits through one step, [[publish]]: it states the
+  * partitions it adds, replaces or drops, and `publish` writes the
+  * delta or full manifest and commits it.
   *
   * The interface is format-agnostic so a real Iceberg catalog can be
   * swapped in where one exists.
   */
 class TierTable(spark: SparkSession, root: String, nBuckets: Int = 16,
-    compactEvery: Int = 8, maxLineage: Int = 256) {
+    compactEvery: Int = 8) {
 
   private val rootPath = Paths.get(root)
   private val dataDir = rootPath.resolve("data")
@@ -78,81 +87,9 @@ class TierTable(spark: SparkSession, root: String, nBuckets: Int = 16,
   Files.createDirectories(dataDir)
   Files.createDirectories(metaDir)
 
-  // ---- manifest model (hand-rolled JSON: no extra deps) -------------
-
-  /** One committed partition: relative dir, runId lineage + metrics.
-    * `runIds` lists every run that has been merged into this
-    * partition's current contents (ordered by commit; bounded by
-    * `maxLineage` at full-snapshot compactions). */
-  case class PartEntry(pb: Int, pd: String, dir: String, rows: Long,
-      bytes: Long, runIds: Seq[String])
-
-  /** `full = true` → entries are the complete live-partition set;
-    * otherwise a delta over `parent`. */
-  case class Manifest(version: Int, parent: Int, full: Boolean,
-      entries: Seq[PartEntry])
-
-  // ']' is escaped so the minimal regex parser's runIds-array match
-  // (`\[[^\]]*\]`) can never be cut short by a bracket inside an id
-  private def esc(s: String) = s.flatMap {
-    case '"' => "\\\""; case '\\' => "\\\\"; case ']' => "\\u005d"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
-  private def unesc(s: String): String = {
-    val b = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) s.charAt(i + 1) match {
-        case 'u' => b.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar); i += 6
-        case e => b.append(e); i += 2
-      } else { b.append(c); i += 1 }
-    }
-    b.toString
-  }
-
-  private def manifestJson(m: Manifest): String = {
-    val es = m.entries.map { e =>
-      val ids = e.runIds.map(r => "\"" + esc(r) + "\"").mkString("[", ",", "]")
-      s"""{"pb":${e.pb},"pd":"${esc(e.pd)}","dir":"${esc(e.dir)}","rows":${e.rows},"bytes":${e.bytes},"runIds":$ids}"""
-    }.mkString("[", ",", "]")
-    s"""{"version":${m.version},"parent":${m.parent},"full":${m.full},"entries":$es}"""
-  }
-
-  private val quoted = """"((?:[^"\\]|\\.)*)"""".r
-
-  private def parseManifest(s: String): Manifest = {
-    // minimal parser for the writer's own format
-    val version = """"version":(\d+)""".r.findFirstMatchIn(s).get.group(1).toInt
-    val parent = """"parent":(-?\d+)""".r.findFirstMatchIn(s).get.group(1).toInt
-    val full = """"full":(true|false)""".r.findFirstMatchIn(s).get.group(1).toBoolean
-    val entry =
-      // pb may be -1: equality-delete tombstone entries
-      """\{"pb":(-?\d+),"pd":"([^"]*)","dir":"([^"]*)","rows":(\d+),"bytes":(\d+),"runIds":\[([^\]]*)\]\}""".r
-    val entries = entry.findAllMatchIn(s).map { m =>
-      val ids = quoted.findAllMatchIn(m.group(6)).map(q => unesc(q.group(1))).toSeq
-      PartEntry(m.group(1).toInt, m.group(2), m.group(3), m.group(4).toLong,
-        m.group(5).toLong, ids)
-    }.toSeq
-    // STRICT parse: every entry object must round-trip. A best-effort
-    // regex that silently skips non-matching entries would make a
-    // corrupted (or older-format) manifest read as empty/partial —
-    // read() shrinks, the next merge commits over the "missing"
-    // partitions, and vacuum() deletes their files as unreferenced.
-    // Fail loudly instead.
-    val claimed = "\\{\"pb\":".r.findAllMatchIn(s).size
-    if (claimed != entries.size)
-      throw new IllegalStateException(
-        s"manifest parse mismatch: $claimed entry objects, ${entries.size} parsed — " +
-          "corrupted or incompatible manifest; refusing a partial read")
-    Manifest(version, parent, full, entries)
-  }
-
   private val versionFile = """v(\d+)\.json""".r
 
-  private def listDir(p: Path): Seq[Path] = {
+  protected def listDir(p: Path): Seq[Path] = {
     val s = Files.list(p)
     try s.iterator().asScala.toSeq finally s.close()
   }
@@ -169,8 +106,7 @@ class TierTable(spark: SparkSession, root: String, nBuckets: Int = 16,
     }.foldLeft(-1)(math.max)
 
   private def manifestAt(v: Int): Manifest =
-    parseManifest(new String(
-      Files.readAllBytes(metaDir.resolve(s"v$v.json")), StandardCharsets.UTF_8))
+    TierTable.decode(Files.readAllBytes(metaDir.resolve(s"v$v.json")))
 
   /** Highest version whose manifest actually parses. Normally ==
     * [[currentVersion]]; differs only if a power/OS crash persisted
@@ -227,6 +163,68 @@ class TierTable(spark: SparkSession, root: String, nBuckets: Int = 16,
     seen.values.toSeq
   }
 
+  // ---- the one commit path ------------------------------------------
+
+  /** One writer's commit attempt: the last READABLE snapshot it
+    * resolves from (`parent`), that snapshot's live entries, and the
+    * version it will publish — numbered past the highest committed
+    * file, so a crash-corrupted head (readableHead < currentVersion) is
+    * bypassed by the parent pointer and never blocks future commits.
+    * `outDir` is the attempt-unique data dir: a CAS loser or crashed
+    * writer can never have written into a directory a committed
+    * manifest references. */
+  protected final class Attempt {
+    val parent: Int = readableHead
+    val live: Seq[PartEntry] = resolvedAt(parent)
+    val version: Int = currentVersion + 1
+    val outDir: String = s"data/v$version-${nonce()}"
+    lazy val byPart: Map[(Int, String), PartEntry] =
+      live.map(e => (e.pb, e.pd) -> e).toMap
+
+    /** Partitions whose lineage already records `runId` (resume skips them). */
+    def doneFor(runId: String): Set[(Int, String)] =
+      byPart.keySet.filter(byPart(_).runIds.contains(runId))
+  }
+
+  /** The commit rule every writer shares. `changed` holds the entries
+    * the attempt adds or replaces (keyed by (pb, pd)); `dropped`
+    * selects live entries to remove. The manifest is a DELTA of
+    * `changed` over the attempt's parent, or a FULL snapshot carrying
+    * every untouched live entry forward — every `compactEvery`-th
+    * version, and whenever an entry is dropped, because a delta can
+    * only add or replace. An attempt that changes nothing publishes
+    * nothing and returns its parent's manifest. */
+  protected def publish(a: Attempt, changed: Seq[PartEntry],
+      dropped: PartEntry => Boolean = _ => false): Manifest = {
+    val drops = a.live.exists(dropped)
+    if (changed.isEmpty && !drops)
+      return if (a.parent < 0) Manifest(-1, -1, full = true, Nil) else manifestAt(a.parent)
+    val full = drops || a.version % compactEvery == 0
+    val touched = changed.map(e => (e.pb, e.pd)).toSet
+    val entries =
+      if (full) a.live.filterNot(e => dropped(e) || touched((e.pb, e.pd))) ++ changed
+      else changed
+    val m = Manifest(a.version, a.parent, full, entries)
+    commit(m)
+    m
+  }
+
+  /** Entry for a partition an attempt wrote at `dir`: row count from
+    * the written parquet footers, or a zero-row marker (dir = "") when
+    * the write left the partition empty. */
+  protected def writtenEntry(pb: Int, pd: String, dir: String,
+      runIds: Seq[String]): PartEntry = {
+    val p = rootPath.resolve(dir)
+    if (Files.isDirectory(p)) PartEntry(pb, pd, dir, dirRowCount(p), dirSize(p), runIds)
+    else PartEntry(pb, pd, "", 0L, 0L, runIds)
+  }
+
+  /** A write that left every partition empty leaves only _SUCCESS:
+    * remove the attempt dir before commit, so marker entries carry no
+    * data dir at all (nothing references it yet). */
+  protected def dropEmptyAttempt(a: Attempt, entries: Seq[PartEntry]): Unit =
+    if (entries.forall(_.dir.isEmpty)) deleteRecursively(rootPath.resolve(a.outDir))
+
   /** Test seam: runs just before the atomic publish (after data +
     * temp manifest are written). Lets a spec inject a racing winner
     * at the exact CAS window. */
@@ -266,7 +264,7 @@ class TierTable(spark: SparkSession, root: String, nBuckets: Int = 16,
       }
     }
     val tmp = metaDir.resolve(s"tmp-${nonce()}.json")
-    Files.write(tmp, manifestJson(m).getBytes(StandardCharsets.UTF_8))
+    Files.write(tmp, TierTable.encode(m))
     // Durability before visibility: force the manifest's data pages to
     // disk BEFORE the atomic publish. Without this, a power/OS crash
     // can persist the v{N}.json directory entry but not its contents —
@@ -407,8 +405,10 @@ class TierTable(spark: SparkSession, root: String, nBuckets: Int = 16,
   def countRows: Long = resolvedEntries.filter(_.pb >= 0).map(_.rows).sum
 
   /** Pending equality-delete tombstone entries at HEAD. */
-  def pendingTombstones: Seq[PartEntry] =
-    resolvedEntries.filter(e => e.pb < 0 && e.dir.nonEmpty)
+  def pendingTombstones: Seq[PartEntry] = pending(resolvedEntries)
+
+  private def pending(es: Seq[PartEntry]): Seq[PartEntry] =
+    es.filter(e => e.pb < 0 && e.dir.nonEmpty)
 
   // ---- merge --------------------------------------------------------
 
@@ -441,28 +441,19 @@ class TierTable(spark: SparkSession, root: String, nBuckets: Int = 16,
     * O(touched) only.
     */
   def merge(updates: DataFrame, runId: String): Manifest = {
-    // resolve from the last READABLE snapshot, but number past the
-    // highest committed file — a crash-corrupted head (readableHead <
-    // currentVersion) is bypassed by the parent pointer and never
-    // blocks future commits
-    val prevVersion = readableHead
-    val resolved = resolvedAt(prevVersion).map(e => (e.pb, e.pd) -> e).toMap
-    val newVersion = currentVersion + 1
-    val makeFull = newVersion % compactEvery == 0
+    import spark.implicits._
+    val a = new Attempt
     val upd = withPartCols(updates).cache()
     try {
       val affected = upd.select("pb", "pd").distinct().collect()
         .map(r => (r.getInt(0), r.getString(1))).toSet
-      val doneForRun = resolved.keySet.filter(resolved(_).runIds.contains(runId))
-      val todo = affected -- doneForRun
-      if (todo.isEmpty) { // empty batch or fully resumed: publish nothing
-        return currentManifest.getOrElse(Manifest(-1, -1, full = true, Nil))
-      }
-      val todoDf = todo.toSeq.toDF_(spark)
+      val done = a.doneFor(runId)
+      val todo = affected -- done
+      if (todo.isEmpty) return publish(a, Nil) // empty batch or fully resumed
 
       val existingAffected: Option[DataFrame] = {
         // a zero-row marker (dir = "") has nothing to carry into the merge
-        val dirs = todo.toSeq.flatMap(resolved.get).filter(_.dir.nonEmpty)
+        val dirs = todo.toSeq.flatMap(a.byPart.get).filter(_.dir.nonEmpty)
           .map(e => s"$root/${e.dir}")
         // leaf-dir reads drop the hive-style partition columns;
         // recompute them — pb/pd are pure functions of (key, bucket)
@@ -472,58 +463,45 @@ class TierTable(spark: SparkSession, root: String, nBuckets: Int = 16,
       // when nothing resumed, todo == affected and the semi-join
       // selects every row — skip the join outright
       val updTodo =
-        if (doneForRun.isEmpty) upd
-        else upd.join(todoDf, Seq("pb", "pd"), "left_semi")
+        if (done.isEmpty) upd
+        else upd.join(todo.toSeq.toDF("pb", "pd"), Seq("pb", "pd"), "left_semi")
       val combined = existingAffected match {
         case Some(ex) => ex.unionByName(updTodo)
         case None => updTodo
       }
       val merged = Rollup.merge(combined, col("pb"), col("pd"), col("key"), col("bucket"))
-
-      // attempt-unique data dir: a CAS loser or crashed writer can
-      // never have written into a directory a committed manifest
-      // references (ADVICE r2: the shared data/v{N} + Overwrite layout
-      // let the loser delete the winner's files)
-      val outDir = s"data/v$newVersion-${nonce()}"
-      // hash-distribute by the partition columns before partitionBy:
-      // otherwise every shuffle partition writes its own file into
-      // every dir it touches (up to parallelism× small files per
-      // partition dir — measured 32 files/dir at local[32]). One task
-      // per (pb, pd) group → exactly one file per partition dir, the
-      // same write distribution real Iceberg uses (distribution-mode
-      // = hash).
-      merged.repartition(col("pb"), col("pd")).write
-        .partitionBy("pb", "pd")
-        .mode(SaveMode.Overwrite)
-        .parquet(s"$root/$outDir")
-
-      // per-partition row counts come from the written parquet footers
-      // (exact — footer record counts are the writer's own row counts,
-      // no retry/accumulator hazard). This replaces a second full pass
-      // over `merged` (groupBy(pb, pd).count + an extra cache
-      // materialization): one Spark job per merge instead of two, and
-      // `merged` is computed exactly once. Entry metadata I/O (footer
-      // + dir walk per touched partition) runs in parallel — a wide
-      // merge (hundreds of (pb, day) dirs) would otherwise serialize
-      // hundreds of millisecond-class file opens on the driver.
-      val newEntries = parallelMap(todo.toSeq.sorted) { case (pb, pd) =>
-        val dir = s"$outDir/pb=$pb/pd=$pd"
-        val p = rootPath.resolve(dir)
-        val bytes = dirSize(p)
-        val lineage = resolved.get((pb, pd)).map(_.runIds).getOrElse(Nil) :+ runId
-        PartEntry(pb, pd, dir, dirRowCount(p), bytes, lineage)
-      }
-      val entries =
-        if (makeFull)
-          (resolved.filterNot { case (part, _) => todo.contains(part) }
-            .values.toSeq ++ newEntries)
-            .map(e => e.copy(runIds = e.runIds.takeRight(maxLineage)))
-        else newEntries
-      val m = Manifest(newVersion, prevVersion, makeFull, entries)
-      commit(m)
-      m
+      writePartitioned(merged, a)
+      publish(a, rewrittenEntries(a, todo, runId))
     } finally upd.unpersist()
   }
+
+  /** Write rows carrying pb/pd under the attempt's dir, one dir per
+    * (pb, pd). Hash-distribute by the partition columns before
+    * partitionBy: otherwise every shuffle partition writes its own file
+    * into every dir it touches (up to parallelism× small files per
+    * partition dir — measured 32 files/dir at local[32]). One task per
+    * (pb, pd) group → exactly one file per partition dir, the same
+    * write distribution real Iceberg uses (distribution-mode = hash). */
+  private def writePartitioned(rows: DataFrame, a: Attempt): Unit =
+    rows.repartition(col("pb"), col("pd")).write
+      .partitionBy("pb", "pd")
+      .mode(SaveMode.Overwrite)
+      .parquet(s"$root/${a.outDir}")
+
+  /** Entries of the partitions `todo` an attempt rewrote, `runId`
+    * appended to each one's lineage. Row counts come from the written
+    * parquet footers (exact — the writer's own counts, no
+    * retry/accumulator hazard), so the written rows are computed once:
+    * no cache, no second groupBy-count job. Footer reads and dir walks
+    * run in parallel — a wide merge (hundreds of (pb, day) dirs) would
+    * otherwise serialize hundreds of millisecond-class file opens on
+    * the driver. */
+  private def rewrittenEntries(a: Attempt, todo: Set[(Int, String)],
+      runId: String): Seq[PartEntry] =
+    parallelMap(todo.toSeq.sorted) { case (pb, pd) =>
+      writtenEntry(pb, pd, s"${a.outDir}/pb=$pb/pd=$pd",
+        TierTable.lineage(a.byPart.get((pb, pd)), runId))
+    }
 
   /** Key-level DELETE — the Iceberg copy-on-write DELETE analog and
     * the transcript engine's right-to-be-forgotten op: remove every
@@ -549,52 +527,35 @@ class TierTable(spark: SparkSession, root: String, nBuckets: Int = 16,
     * COPY-ON-WRITE CAVEAT (GDPR): earlier snapshots still serve the
     * deleted rows — readAt(preDelete) is unchanged by design. Physical
     * forgetting completes with [[expireSnapshots]] + [[vacuum]]
-    * (spec-pinned). `keys` is an in-filter list (the interactive
-    * forget-request shape); a bulk delete set should arrive as a
-    * DataFrame anti-join instead — not this entry point.
+    * (spec-pinned). `keys` runs through the DataFrame overload below,
+    * so a bulk forget list never becomes a giant literal In expression.
     *
     * Publishes nothing (returns the current manifest) when no
     * partition contains the keys or the runId already applied. */
   def deleteKeys(keys: Seq[String], runId: String): Manifest = {
     require(keys.nonEmpty, "need at least one key to delete")
     import spark.implicits._
-    // bulk lists go through the DataFrame anti-join path — a giant
-    // literal In expression is a driver-memory/plan-size/Janino
-    // hazard (ADVICE r5 #2); 1000 literals is well inside safe plan
-    // size while keeping the interactive path join-free
-    if (keys.size > 1000) return deleteKeys(keys.toDF("key"), runId)
-    val noop = currentManifest.getOrElse(Manifest(-1, -1, full = true, Nil))
-    val prevVersion = readableHead
-    if (prevVersion < 0) return noop
-    val resolved = resolvedAt(prevVersion).map(e => (e.pb, e.pd) -> e).toMap
-    val pbs = keys.toDF("key")
-      .select(pmod(xxhash64(col("key")), lit(nBuckets.toLong)).cast("int"))
-      .as[Int].collect().toSet
-    val cand = resolved.values.filter(e => e.dir.nonEmpty && pbs(e.pb)).toSeq
-    rewriteWithout(cand, col("key").isin(keys: _*), runId, resolved, prevVersion)
+    deleteKeys(keys.toDF("key"), runId)
   }
 
-  /** Bulk copy-on-write key delete: the delete set arrives as a
-    * one-column `key` DataFrame (e.g. the union of pending tombstone
-    * files) — discovery via semi-join, rewrite via left-anti join,
-    * manifest-level pb-bucket pruning from the key set's hash buckets
-    * (a ≤ nBuckets collect, never the keys themselves). Same lineage
-    * idempotency, marker and copy-on-write/expiry story as the Seq
-    * form. */
+  /** Copy-on-write key delete of a one-column `key` DataFrame (e.g.
+    * the union of pending tombstone files) — discovery via semi-join,
+    * rewrite via left-anti join, manifest-level pb-bucket pruning from
+    * the key set's hash buckets (a ≤ nBuckets collect, never the keys
+    * themselves), so a 10⁵-key forget backlog never builds a
+    * 10⁵-literal In expression (driver memory, plan size, Janino
+    * pressure — the documented wide-literal class). */
   def deleteKeys(keysDf: DataFrame, runId: String): Manifest = {
     import spark.implicits._
-    val noop = currentManifest.getOrElse(Manifest(-1, -1, full = true, Nil))
-    val prevVersion = readableHead
-    if (prevVersion < 0) return noop
-    val resolved = resolvedAt(prevVersion).map(e => (e.pb, e.pd) -> e).toMap
+    val a = new Attempt
     val keys = keysDf.select(col("key")).where(col("key").isNotNull)
       .distinct().localCheckpoint(true)
     val pbs = keys
       .select(pmod(xxhash64(col("key")), lit(nBuckets.toLong)).cast("int"))
       .distinct().as[Int].collect().toSet
-    if (pbs.isEmpty) return noop // empty delete set
-    val cand = resolved.values.filter(e => e.dir.nonEmpty && pbs(e.pb)).toSeq
-    rewriteWithoutKeys(cand, keys, runId, resolved, prevVersion)
+    rewriteWithout(a, a.live.filter(e => e.dir.nonEmpty && pbs(e.pb)), runId,
+      hit = _.join(keys, Seq("key"), "left_semi"),
+      keep = _.join(keys, Seq("key"), "left_anti"))
   }
 
   /** Predicate DELETE — the general Iceberg `DELETE WHERE` analog:
@@ -609,48 +570,23 @@ class TierTable(spark: SparkSession, root: String, nBuckets: Int = 16,
     * DELETE semantics: only pred = TRUE deletes). Same lineage
     * idempotency, marker, and copy-on-write/expiry story as
     * [[deleteKeys]]. */
-  def deleteWhere(pred: org.apache.spark.sql.Column, runId: String): Manifest = {
-    val noop = currentManifest.getOrElse(Manifest(-1, -1, full = true, Nil))
-    val prevVersion = readableHead
-    if (prevVersion < 0) return noop
-    val resolved = resolvedAt(prevVersion).map(e => (e.pb, e.pd) -> e).toMap
-    val cand = resolved.values.filter(e => e.dir.nonEmpty && e.pb >= 0).toSeq
-    rewriteWithout(cand, pred, runId, resolved, prevVersion)
-  }
-
-  /** Shared copy-on-write delete core: find the partitions among
-    * `cand` holding a pred = TRUE row (one pushdown scan), rewrite
-    * them without those rows, commit a delta with runId lineage. */
-  private def rewriteWithout(cand: Seq[PartEntry],
-      pred: org.apache.spark.sql.Column, runId: String,
-      resolved: Map[(Int, String), PartEntry], prevVersion: Int): Manifest =
-    rewriteWithoutCore(cand, runId, resolved, prevVersion,
+  def deleteWhere(pred: Column, runId: String): Manifest = {
+    val a = new Attempt
+    rewriteWithout(a, a.live.filter(e => e.dir.nonEmpty && e.pb >= 0), runId,
       hit = _.where(pred),
       // keep rows where pred is FALSE or NULL (SQL DELETE deletes only TRUE)
       keep = _.where(!(pred <=> lit(true))))
+  }
 
-  /** DataFrame twin of the delete core — the BULK path (ADVICE r5 #2):
-    * the delete set arrives as a one-column `key` DataFrame, discovery
-    * is a semi-join and the rewrite a left-anti join, so a 10⁵-key
-    * forget backlog never builds a 10⁵-literal In expression (driver
-    * memory, plan size, Janino pressure — the documented wide-literal
-    * class). */
-  private def rewriteWithoutKeys(cand: Seq[PartEntry], keysDf: DataFrame,
-      runId: String, resolved: Map[(Int, String), PartEntry],
-      prevVersion: Int): Manifest =
-    rewriteWithoutCore(cand, runId, resolved, prevVersion,
-      hit = _.join(keysDf, Seq("key"), "left_semi"),
-      keep = _.join(keysDf, Seq("key"), "left_anti"))
-
-  private def rewriteWithoutCore(cand: Seq[PartEntry], runId: String,
-      resolved: Map[(Int, String), PartEntry], prevVersion: Int,
+  /** Shared copy-on-write delete: find the partitions among `cand`
+    * holding a row `hit` selects (one pushdown-pruned scan naming the
+    * files → nonce-unique dirs → partitions), rewrite them with the
+    * rows `keep` selects, and publish them with `runId` lineage. A
+    * partition whose every row was deleted has no written dir and
+    * becomes a marker entry (dir = ""). */
+  private def rewriteWithout(a: Attempt, cand: Seq[PartEntry], runId: String,
       hit: DataFrame => DataFrame, keep: DataFrame => DataFrame): Manifest = {
-    val noop = currentManifest.getOrElse(Manifest(-1, -1, full = true, Nil))
-    if (cand.isEmpty) return noop
-    val newVersion = currentVersion + 1
-    val makeFull = newVersion % compactEvery == 0
-    // one scan, pruned by the pushed predicate / semi-join, naming the
-    // files (→ nonce-unique dirs → partitions) that hold matching rows
+    if (cand.isEmpty) return publish(a, Nil)
     val hitFiles = {
       import spark.implicits._
       hit(spark.read.parquet(cand.map(e => s"$root/${e.dir}"): _*))
@@ -659,47 +595,15 @@ class TierTable(spark: SparkSession, root: String, nBuckets: Int = 16,
     val touched = cand
       .filter(e => hitFiles.exists(_.contains(s"/${e.dir}/")))
       .map(e => (e.pb, e.pd)).toSet
-    val doneForRun = resolved.keySet.filter(resolved(_).runIds.contains(runId))
-    val todo = touched -- doneForRun
-    if (todo.isEmpty) return noop
-
-    val todoDirs = todo.toSeq.flatMap(resolved.get).map(e => s"$root/${e.dir}")
+    val todo = touched -- a.doneFor(runId)
+    if (todo.isEmpty) return publish(a, Nil)
     // leaf-dir reads drop the hive partition columns; pb/pd are pure
-    // functions of (key, bucket) — same recompute as merge.
-    val kept = keep(withPartCols(spark.read.parquet(todoDirs: _*)))
-    val outDir = s"data/v$newVersion-${nonce()}"
-    // ONE pass over the kept rows (the merge single-pass discipline):
-    // write first, then take per-partition counts from the written
-    // parquet footers instead of a cache + a groupBy-count job — the
-    // rewritten partitions are read once, not twice. A partition
-    // whose every row was deleted simply has no written dir and
-    // becomes a marker entry (dir = ""), exactly as before.
-    kept.repartition(col("pb"), col("pd")).write
-      .partitionBy("pb", "pd")
-      .mode(SaveMode.Overwrite)
-      .parquet(s"$root/$outDir")
-    val newEntries = parallelMap(todo.toSeq.sorted) { case (pb, pd) =>
-      val lineage = resolved((pb, pd)).runIds :+ runId
-      val dir = s"$outDir/pb=$pb/pd=$pd"
-      val p = rootPath.resolve(dir)
-      if (Files.isDirectory(p))
-        PartEntry(pb, pd, dir, dirRowCount(p), dirSize(p), lineage)
-      else PartEntry(pb, pd, "", 0L, 0L, lineage)
-    }
-    // all rows deleted → the write left only _SUCCESS: remove the
-    // empty attempt dir before commit so the "marker entries carry no
-    // data dir at all" invariant holds (nothing references it yet)
-    if (newEntries.forall(_.dir.isEmpty))
-      deleteRecursively(rootPath.resolve(outDir))
-    val entries =
-      if (makeFull)
-        (resolved.filterNot { case (part, _) => todo.contains(part) }
-          .values.toSeq ++ newEntries)
-          .map(e => e.copy(runIds = e.runIds.takeRight(maxLineage)))
-      else newEntries
-    val m = Manifest(newVersion, prevVersion, makeFull, entries)
-    commit(m)
-    m
+    // functions of (key, bucket) — same recompute as merge
+    val todoDirs = todo.toSeq.map(a.byPart).map(e => s"$root/${e.dir}")
+    writePartitioned(keep(withPartCols(spark.read.parquet(todoDirs: _*))), a)
+    val entries = rewrittenEntries(a, todo, runId)
+    dropEmptyAttempt(a, entries)
+    publish(a, entries)
   }
 
   /** Lazy key-level DELETE — the Iceberg v2 EQUALITY-DELETE
@@ -732,37 +636,22 @@ class TierTable(spark: SparkSession, root: String, nBuckets: Int = 16,
     * racing late merge); spec-pinned. */
   def deleteKeysLazy(keys: Seq[String], runId: String): Manifest = {
     require(keys.nonEmpty, "need at least one key to delete")
-    // runId is embedded in the manifest pd field (pd = "ts:<runId>").
-    // manifestJson escapes it, but the strict entry parser reads pd
-    // with ([^"]*) which cannot match escaped quotes — a quote or
-    // backslash would commit a manifest that later fails strict parse,
-    // silently losing the tombstone (ADVICE r5 #1). Fail loudly here.
+    // input validation: runId becomes the tombstone's partition label
+    // (pd = "ts:<runId>"), shown by partitionMetrics and in logs — keep
+    // it a plain identifier
     require(runId.matches("[A-Za-z0-9._/:-]+"),
       s"deleteKeysLazy runId must match [A-Za-z0-9._/:-]+ (it is embedded " +
         s"in the manifest pd field); got: $runId")
     import spark.implicits._
-    val noop = currentManifest.getOrElse(Manifest(-1, -1, full = true, Nil))
-    val prevVersion = readableHead
-    if (prevVersion < 0) return noop // nothing committed yet to mask
-    val resolved = resolvedAt(prevVersion)
-    if (resolved.exists(e => e.pb < 0 && e.runIds.contains(runId)))
-      return noop // lineage-idempotent replay
-    val newVersion = currentVersion + 1
-    val makeFull = newVersion % compactEvery == 0
-    val outDir = s"data/v$newVersion-${nonce()}"
-    val dir = s"$outDir/tombstone"
+    val a = new Attempt
+    // nothing committed yet to mask, or a lineage-idempotent replay
+    if (a.parent < 0 || a.live.exists(e => e.pb < 0 && e.runIds.contains(runId)))
+      return publish(a, Nil)
+    val dir = s"${a.outDir}/tombstone"
     val ks = keys.distinct
     ks.toDF("key").coalesce(1).write.parquet(s"$root/$dir")
-    val entry = PartEntry(-1, s"ts:$runId", dir, ks.size.toLong,
-      dirSize(rootPath.resolve(dir)), Seq(runId))
-    val entries =
-      if (makeFull)
-        (resolved.map(e => e.copy(runIds = e.runIds.takeRight(maxLineage)))
-          :+ entry)
-      else Seq(entry)
-    val m = Manifest(newVersion, prevVersion, makeFull, entries)
-    commit(m)
-    m
+    publish(a, Seq(PartEntry(-1, s"ts:$runId", dir, ks.size.toLong,
+      dirSize(rootPath.resolve(dir)), Seq(runId))))
   }
 
   /** Apply (compact) all pending tombstones: one [[deleteKeys]]
@@ -775,14 +664,13 @@ class TierTable(spark: SparkSession, root: String, nBuckets: Int = 16,
     * N forget-requests cost ONE rewrite of the partitions that
     * actually hold any of their keys. */
   def applyTombstones(runId: String): Manifest = {
-    import spark.implicits._
-    val noop = currentManifest.getOrElse(Manifest(-1, -1, full = true, Nil))
-    val tombs = pendingTombstones
-    if (tombs.isEmpty) return noop
+    val before = new Attempt
+    val tombs = pending(before.live)
+    if (tombs.isEmpty) return publish(before, Nil)
     // the batched-apply path IS the bulk case: feed the tombstone
     // parquet directly to the DataFrame delete (semi/anti joins) —
     // never collect the key union to the driver or build a literal
-    // In list from it (ADVICE r5 #2)
+    // In list from it
     deleteKeys(spark.read.parquet(tombs.map(e => s"$root/${e.dir}"): _*)
       .select(col("key")), runId) // no-op if already applied
     // clear: replace each tombstone entry with a zero-row marker —
@@ -790,24 +678,11 @@ class TierTable(spark: SparkSession, root: String, nBuckets: Int = 16,
     // forget-request committed concurrently (after `tombs` was read)
     // must survive to the next apply, never be cleared unapplied.
     val applied = tombs.map(e => (e.pb, e.pd)).toSet
-    val prevVersion = readableHead
-    val resolved = resolvedAt(prevVersion)
-    val todo = resolved.filter(e =>
-      applied((e.pb, e.pd)) && e.dir.nonEmpty && !e.runIds.contains(runId))
-    if (todo.isEmpty) return currentManifest.getOrElse(noop)
-    val newVersion = currentVersion + 1
-    val makeFull = newVersion % compactEvery == 0
-    val markers = todo.map(e =>
-      e.copy(dir = "", rows = 0L, bytes = 0L, runIds = e.runIds :+ runId))
-    val entries =
-      if (makeFull)
-        (resolved.filterNot(e => todo.exists(t => t.pb == e.pb && t.pd == e.pd))
-          ++ markers)
-          .map(e => e.copy(runIds = e.runIds.takeRight(maxLineage)))
-      else markers
-    val m = Manifest(newVersion, prevVersion, makeFull, entries)
-    commit(m)
-    m
+    val a = new Attempt
+    publish(a, pending(a.live)
+      .filter(e => applied((e.pb, e.pd)) && !e.runIds.contains(runId))
+      .map(e => e.copy(dir = "", rows = 0L, bytes = 0L,
+        runIds = TierTable.lineage(Some(e), runId))))
   }
 
   /** Reclaim orphan data directories: attempt-unique dirs written by
@@ -892,17 +767,13 @@ class TierTable(spark: SparkSession, root: String, nBuckets: Int = 16,
     * re-insert them (the same contract as a replayed write after an
     * Iceberg DELETE). Returns the dropped partition count. */
   def dropPartitionsBefore(cutoffDay: String): Int = {
-    val prev = readableHead
-    if (prev < 0) return 0
-    val resolved = resolvedAt(prev)
+    val a = new Attempt
     // pb < 0 = tombstone entries: never retention-dropped (their pd is
     // "ts:<runId>", not a day — and a pending delete must outlive the
     // data it masks)
-    val (dropped, kept) = resolved.partition(e => e.pb >= 0 && e.pd < cutoffDay)
-    if (dropped.isEmpty) return 0
-    commit(Manifest(currentVersion + 1, prev, full = true,
-      kept.map(e => e.copy(runIds = e.runIds.takeRight(maxLineage)))))
-    dropped.size
+    val dropped = (e: PartEntry) => e.pb >= 0 && e.pd < cutoffDay
+    publish(a, Nil, dropped)
+    a.live.count(dropped)
   }
 
   /** Snapshot expiration (Iceberg `expire_snapshots` semantics) — the
@@ -958,7 +829,7 @@ class TierTable(spark: SparkSession, root: String, nBuckets: Int = 16,
     Files.deleteIfExists(p)
   }
 
-  protected def dirSize(p: Path): Long =
+  private def dirSize(p: Path): Long =
     if (!Files.exists(p)) 0L
     else Files.walk(p).iterator().asScala
       .filter(Files.isRegularFile(_)).map(Files.size).sum
@@ -981,7 +852,7 @@ class TierTable(spark: SparkSession, root: String, nBuckets: Int = 16,
     * footers (the writer's own record counts — no Spark job). One
     * footer read per file; the hash-distributed write leaves one file
     * per partition dir, so this is O(1) I/O per entry. */
-  protected def dirRowCount(p: Path): Long =
+  private def dirRowCount(p: Path): Long =
     if (!Files.exists(p)) 0L
     else {
       val conf = footerConf
@@ -995,17 +866,62 @@ class TierTable(spark: SparkSession, root: String, nBuckets: Int = 16,
           try r.getRecordCount finally r.close()
         }.sum
     }
-
-  // small helper: Set[(Int,String)] → DataFrame(pb, pd)
-  implicit private class TupleSeqOps(s: Seq[(Int, String)]) {
-    def toDF_(spark: SparkSession): DataFrame = {
-      import spark.implicits._
-      s.toDF("pb", "pd")
-    }
-  }
 }
 
 object TierTable {
+  /** One committed partition: relative dir, runId lineage + metrics.
+    * `runIds` lists every run that has been merged into this
+    * partition's current contents, ordered by commit. */
+  final case class PartEntry(pb: Int, pd: String, dir: String, rows: Long,
+      bytes: Long, runIds: Seq[String])
+
+  /** `full = true` → entries are the complete live-partition set;
+    * otherwise a delta over `parent`. */
+  final case class Manifest(version: Int, parent: Int, full: Boolean,
+      entries: Seq[PartEntry])
+
+  /** Lineage kept per partition: a writer appending a runId drops the
+    * oldest beyond this many. */
+  val MaxLineage = 256
+
+  /** `prior`'s lineage (none for a new partition) plus `runId`, capped
+    * at [[MaxLineage]]. */
+  private def lineage(prior: Option[PartEntry], runId: String): Seq[String] =
+    (prior.map(_.runIds).getOrElse(Nil) :+ runId).takeRight(MaxLineage)
+
+  /** Manifest codec. Parsing is STRICT: a missing or null field, a
+    * string or float where a number belongs, or trailing content fails
+    * the whole manifest. A best-effort read would make a corrupt
+    * manifest read as partial — read() shrinks, the next merge commits
+    * over the "missing" partitions, and vacuum() deletes their files
+    * as unreferenced. */
+  private val mapper = JsonMapper.builder()
+    .addModule(DefaultScalaModule)
+    .enable(DeserializationFeature.FAIL_ON_MISSING_CREATOR_PROPERTIES,
+      DeserializationFeature.FAIL_ON_NULL_CREATOR_PROPERTIES,
+      DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
+    .disable(DeserializationFeature.ACCEPT_FLOAT_AS_INT)
+    .disable(MapperFeature.ALLOW_COERCION_OF_SCALARS)
+    .build()
+
+  private def encode(m: Manifest): Array[Byte] = mapper.writeValueAsBytes(m)
+
+  /** Jackson's parse errors extend IOException, which every caller
+    * reserves for transient read failures that must surface; a corrupt
+    * manifest is rethrown as an IllegalStateException so readableHead
+    * and vacuum treat it as corrupt and skip it. */
+  private def decode(bytes: Array[Byte]): Manifest = {
+    val m =
+      try mapper.readValue(bytes, classOf[Manifest])
+      catch {
+        case e: JsonProcessingException =>
+          throw new IllegalStateException(s"corrupt manifest: ${e.getOriginalMessage}", e)
+      }
+    require(m.entries.forall(e => e != null && !e.runIds.contains(null)),
+      "corrupt manifest: null entry or runId")
+    m
+  }
+
   /** Typed commit-conflict signal: a concurrent writer claimed the
     * version first. Subclasses IllegalStateException so existing
     * catch sites keep working; [[TierTable.mergeRetrying]] keys its

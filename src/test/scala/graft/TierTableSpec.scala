@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.model.Point
 import graft.operators._
 import graft.tables.{RollupJob, TierTable}
+import graft.tables.TierTable.Manifest
 
 /** TierTable MERGE semantics: snapshot isolation, exact incremental
   * merge, idempotent resume, manifest lineage + metrics. */
@@ -570,6 +571,60 @@ class TierTableSpec extends SparkSpecBase {
     tt.vacuum()
     val after = Rollup.present(tt.read())
     assert(after.exceptAll(want).count() == 0 && want.exceptAll(after).count() == 0)
+  }
+
+  test("strict manifest parse: corrupt heads fall back and vacuum skips them; the earlier hand-written format still reads") {
+    val root = tmp()
+    val tt = new TierTable(spark, root, nBuckets = 2)
+    tt.merge(Rollup.rollupRaw(mkPts(2, 200).toDF(), "minute"), "r0") // v0
+    tt.merge(Rollup.rollupRaw(mkPts(2, 200, startSec = 99999).toDF(), "minute"), "r1") // v1
+    val atV1 = Rollup.present(tt.read()).collect().toSet
+    val meta = java.nio.file.Paths.get(root, "_meta")
+    // the format of the earlier hand-written codec, ']' escape included
+    def esc(s: String) = s.flatMap {
+      case '"' => "\\\""; case '\\' => "\\\\"; case ']' => "\\u005d"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    }
+    def json(m: Manifest): String = {
+      val es = m.entries.map { e =>
+        val ids = e.runIds.map(r => "\"" + esc(r) + "\"").mkString("[", ",", "]")
+        s"""{"pb":${e.pb},"pd":"${esc(e.pd)}","dir":"${esc(e.dir)}","rows":${e.rows},"bytes":${e.bytes},"runIds":$ids}"""
+      }.mkString("[", ",", "]")
+      s"""{"version":${m.version},"parent":${m.parent},"full":${m.full},"entries":$es}"""
+    }
+    // same field names and order as that format
+    assert(Files.readString(meta.resolve("v1.json")) == json(tt.currentManifest.get))
+
+    // each corrupt v2 references an orphan dir: a reader must fall back
+    // to v1, and vacuum must treat the manifest as referencing nothing
+    val orphan = java.nio.file.Paths.get(root, "data", "v2-orphan")
+    val entry = """{"pb":0,"pd":"2024-01-01","dir":"data/v2-orphan/pb=0","rows":5,"bytes":9,"runIds":["x"]}"""
+    val head = """{"version":2,"parent":1,"full":false,"entries":["""
+    Seq(
+      "missing field" -> (head + entry.replace(""","bytes":9""", "") + "]}"),
+      "string-typed rows" -> (head + entry.replace(""""rows":5""", """"rows":"5"""") + "]}"),
+      "float-typed rows" -> (head + entry.replace(""""rows":5""", """"rows":5.0""") + "]}"),
+      "null runId" -> (head + entry.replace("""["x"]""", "[null]") + "]}"),
+      "trailing token" -> (head + entry + "]}{}")
+    ).foreach { case (what, s) =>
+      Files.createDirectories(orphan.resolve("pb=0"))
+      Files.write(meta.resolve("v2.json"), s.getBytes("UTF-8"))
+      assert(tt.currentVersion == 2 && tt.readableHead == 1, what)
+      assert(Rollup.present(tt.read()).collect().toSet == atV1, what)
+      tt.vacuum()
+      assert(!Files.exists(orphan), s"$what: vacuum kept the corrupt manifest's dir")
+      assert(Rollup.present(tt.read()).collect().toSet == atV1, what)
+    }
+
+    // a v2 in the earlier format, with an id needing every escape, reads
+    val nasty = "a]\"b\\c\n\u0001ü,[x]"
+    val old = Manifest(2, 1, full = true,
+      tt.resolvedEntries.map(_.copy(runIds = Seq(nasty))))
+    Files.write(meta.resolve("v2.json"), json(old).getBytes("UTF-8"))
+    assert(tt.readableHead == 2)
+    assert(tt.resolvedEntries.forall(_.runIds == Seq(nasty)))
+    assert(Rollup.present(tt.read()).collect().toSet == atV1)
   }
 
   test("runIds survive any character (JSON-array lineage, not comma-joined)") {
